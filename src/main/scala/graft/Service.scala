@@ -60,7 +60,7 @@ object Backfill {
       .dropDuplicates("id")
       .withColumn("d", to_date(col("ts")))
       .repartition(col("d"))
-      .sortWithinPartitions("ts", "id")
+      .sortWithinPartitions("d", "ts", "id")
     rows.write.mode("append")
       .option("compression", "zstd")
       .partitionBy("d")

@@ -45,15 +45,23 @@ object PipelineOps {
     * degenerate fixture case parallel (each downstream parse/decode task
     * gets work), the byte term is the guide-§6 output-file-size target
     * that governs at real scale, and the cap is a defect guard against a
-    * source with no real statistics. Consumers sort their outputs, so
-    * layout never changes results.
+    * runaway estimate. A source with no size statistics gets the cores
+    * floor. Consumers sort their outputs, so layout never changes results.
     */
-  private[operators] def parallelFloor(s: SparkSession, df: DataFrame): DataFrame = {
+  private[graft] def parallelFloor(s: SparkSession, df: DataFrame): DataFrame = {
     val dp = s.sparkContext.defaultParallelism.toLong
     val targetBytes = 128L << 20
-    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    val plan = df.queryExecution.optimizedPlan
+    val bytes = plan.stats.sizeInBytes
+    // a leaf without statistics (an RDD, a streaming relation) reports
+    // spark.sql.defaultSizeInBytes (Long.MaxValue), and estimates above it
+    // only rescale that placeholder: the size is unknown, so the cores
+    // floor applies, not the 131,072-partition cap
+    val unknown = df.queryExecution.sparkSession.sessionState.conf.defaultSizeInBytes
     val byBytes =
-      if (bytes.isValidLong) bytes.toLong / targetBytes + 1 else dp
+      if (bytes < unknown && plan.collectLeaves().forall(_.stats.sizeInBytes < unknown))
+        bytes.toLong / targetBytes + 1
+      else dp
     df.repartition(math.max(dp, math.min(byBytes, 1L << 17)).toInt)
   }
 
@@ -69,7 +77,7 @@ object PipelineOps {
       val e = Tables.events(s, sfDir)
         .withColumn("d", to_date(col("ts")))
         .repartition(col("d"))
-        .sortWithinPartitions("ts", "event_id")
+        .sortWithinPartitions("d", "ts", "event_id")
       e.write.mode("overwrite")
         .option("compression", "zstd")
         .partitionBy("d")
@@ -308,7 +316,7 @@ object PipelineOps {
         Tables.events(s, dir)
           .withColumn("d", to_date(col("ts")))
           .repartition(col("d"))
-          .sortWithinPartitions("ts", "event_id")
+          .sortWithinPartitions("d", "ts", "event_id")
           .write.mode("overwrite")
           .option("compression", "zstd")
           .partitionBy("d")

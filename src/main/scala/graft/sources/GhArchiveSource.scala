@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import java.time.LocalDateTime
@@ -41,11 +41,21 @@ object GhArchiveSource {
 
   /** Minimal read schema: the two fields the reference materializes. The
     * JSON reader prunes every other key at parse time (early projection,
-    * ref: internal/gh/gh.go:115-120).
+    * ref: internal/gh/gh.go:115-120). GitHub sends `id` as a JSON string
+    * (`"id":"30000089897"`), which a BIGINT field rejects in FAILFAST mode,
+    * so it is read as STRING (a JSON number reads as its digits) and cast
+    * to BIGINT by `eventId`, as `ArchiveStream.parseRaw` does.
     */
   val schema: StructType = StructType(Seq(
-    StructField("id", LongType),
+    StructField("id", StringType),
     StructField("created_at", StringType)))
+
+  /** `id` as BIGINT: a non-numeric id aborts a FAILFAST read like any
+    * other parse error and is NULL in PERMISSIVE mode.
+    */
+  private def eventId(failFast: Boolean): Column =
+    (if (failFast) col("id").cast(LongType) else col("id").try_cast(LongType))
+      .as("id")
 
   /** Parse an hour key ("2024-01-15-7") to its LocalDateTime. */
   def parseHourKey(key: String): LocalDateTime =
@@ -91,7 +101,7 @@ object GhArchiveSource {
       .json(paths: _*)
       .select(col("id"), col("created_at"), col("_metadata.file_path").as("fp"))
     raw.select(
-      col("id"),
+      eventId(failFast),
       to_timestamp(col("created_at")).as("ts"),
       // TIMESTAMP_NTZ: the hour key is a calendar label (the reference's
       // archive key, always UTC-hour-of-day), not an instant — NTZ keeps it
@@ -180,7 +190,7 @@ object GhArchiveSource {
           "(?:^|/)(" + keyPattern + raw")\.json\.gz$$", 1).as("key"))
       .filter(col("key") =!= "")
       .select(
-        col("id"),
+        eventId(failFast),
         to_timestamp(col("created_at")).as("ts"),
         // same NTZ calendar-label semantics as the batch `read` hour column
         to_timestamp_ntz(col("key"), lit("yyyy-MM-dd-H")).as("hour"))

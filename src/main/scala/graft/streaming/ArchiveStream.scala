@@ -17,9 +17,10 @@ import org.apache.spark.sql.types._
   *  - columnar native-protocol INSERT into a day-partitioned,
   *    (ts,id)-ordered, ZSTD, 3-day-TTL ReplacingMergeTree
   *    (ref: main.go:39-98, README.md:8-17)
-  *      → `foreachBatch` appending date-partitioned, sorted-within-partition,
-  *        zstd parquet — at-least-once, with replayed duplicates collapsed
-  *        at replace-by-key read time (see `archive`'s contract note).
+  *      → `foreachBatch` appending date-partitioned zstd parquet, each
+  *        file sorted by (ts, id) — at-least-once, with replayed duplicates
+  *        collapsed at replace-by-key read time (see `archive`'s contract
+  *        note).
   *
   * All transforms are expressed on an unbound DataFrame so the SAME functions
   * run in batch mode (where the DuckDB oracle can check them — see
@@ -84,7 +85,10 @@ object ArchiveStream {
         batch
           .withColumn("d", to_date(col("ts")))
           .repartition(col("d"))
-          .sortWithinPartitions("ts", "id")
+          // the leading `d` matches the ordering the partitioned write
+          // requires, so the planner keeps this one sort; a bare (ts, id)
+          // sort is dropped for the writer's own `Sort [d]`
+          .sortWithinPartitions("d", "ts", "id")
           .write.mode("append")
           .option("compression", "zstd")
           .partitionBy("d")

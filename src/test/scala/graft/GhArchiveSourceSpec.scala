@@ -19,11 +19,12 @@ class GhArchiveSourceSpec extends SparkSpec {
 
   private lazy val archiveDir: String = {
     val dir = Files.createTempDirectory("graft-gha-").toString
-    def ev(id: Long, ts: String) =
-      s"""{"id":$id,"created_at":"$ts","type":"PushEvent","actor":{"login":"u$id"}}"""
-    writeHourFile(dir, "2024-01-15-0", Seq(ev(1, "2024-01-15T00:10:00Z"), ev(2, "2024-01-15T00:20:00Z")))
-    writeHourFile(dir, "2024-01-15-1", Seq(ev(3, "2024-01-15T01:05:00Z")))
-    writeHourFile(dir, "2024-01-15-2", Seq(ev(4, "2024-01-15T02:30:00Z")))
+    def ev(id: String, ts: String) =
+      s"""{"id":$id,"created_at":"$ts","type":"PushEvent","actor":{"login":"octocat"}}"""
+    // GitHub sends ids as JSON strings; numeric ids must keep working
+    writeHourFile(dir, "2024-01-15-0", Seq(ev("1", "2024-01-15T00:10:00Z"), ev("2", "2024-01-15T00:20:00Z")))
+    writeHourFile(dir, "2024-01-15-1", Seq(ev("\"30000089897\"", "2024-01-15T01:05:00Z")))
+    writeHourFile(dir, "2024-01-15-2", Seq(ev("4", "2024-01-15T02:30:00Z")))
     Files.write(java.nio.file.Paths.get(s"$dir/not-an-hour-file.txt"),
       "ignored".getBytes("UTF-8"))
     dir
@@ -56,7 +57,7 @@ class GhArchiveSourceSpec extends SparkSpec {
     val rows = df.collect().map(r => (r.getLong(0),
       r.getTimestamp(1).toString,
       r.getAs[java.time.LocalDateTime](2).toString)).sortBy(_._1)
-    assert(rows.map(_._1).toSeq == Seq(1L, 2L, 3L))
+    assert(rows.map(_._1).toSeq == Seq(1L, 2L, 30000089897L)) // quoted id cast
     assert(rows(0)._2 == "2024-01-15 00:10:00.0")
     assert(rows(2)._3 == "2024-01-15T01:00") // hour key (NTZ), not event ts
   }
@@ -64,10 +65,12 @@ class GhArchiveSourceSpec extends SparkSpec {
   test("permissive mode keeps malformed rows as nulls; failfast aborts") {
     val dir = Files.createTempDirectory("graft-gha-bad-").toString
     writeHourFile(dir, "2024-01-15-0",
-      Seq("""{"id":1,"created_at":"2024-01-15T00:10:00Z"}""", "{not json"))
+      Seq("""{"id":1,"created_at":"2024-01-15T00:10:00Z"}""", "{not json",
+        """{"id":"x1","created_at":"2024-01-15T00:20:00Z"}"""))
     val permissive = GhArchiveSource.read(spark, dir, failFast = false).collect()
-    assert(permissive.length == 2)
-    assert(permissive.count(_.isNullAt(0)) == 1)
+    assert(permissive.length == 3)
+    // the unparseable line and the non-numeric id both read as NULL ids
+    assert(permissive.count(_.isNullAt(0)) == 2)
     intercept[org.apache.spark.SparkException] {
       GhArchiveSource.read(spark, dir, failFast = true).collect()
     }
@@ -109,7 +112,7 @@ class GhArchiveSourceSpec extends SparkSpec {
     q.awaitTermination(60000)
     val ids = spark.sql("select id from gha_stream")
       .collect().map(_.getLong(0)).sorted
-    assert(ids.toSeq == Seq(1L, 2L, 3L, 4L))
+    assert(ids.toSeq == Seq(1L, 2L, 4L, 30000089897L)) // quoted id cast
     // AvailableNow + maxFilesPerTrigger=1 → one micro-batch per hour file
     assert(q.recentProgress.map(_.numInputRows).sum == 4)
   }
@@ -137,7 +140,7 @@ class GhArchiveSourceSpec extends SparkSpec {
       // catch-up (AvailableNow) archived every hour file before returning
       val ids = spark.read.parquet(out).select("id")
         .collect().map(_.getLong(0)).sorted
-      assert(ids.toSeq == Seq(1L, 2L, 3L, 4L))
+      assert(ids.toSeq == Seq(1L, 2L, 4L, 30000089897L))
       // local batches finish far under the 60 s target → controller opened
       // the throttle (damped to at most 2x the initial rate)
       assert(adapted == 2, s"expected damped 2x step from 1, got $adapted")

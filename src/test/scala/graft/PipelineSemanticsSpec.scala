@@ -50,6 +50,20 @@ class PipelineSemanticsSpec extends SparkSpec {
     assert(diff == 0)
   }
 
+  test("parallelFloor: a source without size statistics gets the cores floor") {
+    import spark.implicits._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val dp = spark.sparkContext.defaultParallelism
+    val rdd = spark.sparkContext.parallelize(1 to 100, 3)
+    // a LogicalRDD, and an object RDD whose projection rescales the
+    // placeholder size below spark.sql.defaultSizeInBytes
+    val rows = spark.createDataFrame(rdd.map(Row(_)),
+      StructType(Seq(StructField("x", IntegerType))))
+    for (df <- Seq(rows, rdd.toDF("x")))
+      assert(operators.PipelineOps.parallelFloor(spark, df).rdd.getNumPartitions == dp)
+  }
+
   test("join_asof: every purchase appears once, click never after purchase") {
     val out = SparkEntry.queries("join_asof")(spark, sf)
     val purchases = Tables.events(spark, sf).filter(col("event_type") === "purchase")

@@ -71,6 +71,55 @@ class StreamingSpec extends SparkSpec {
     assert(days.toSeq == Seq("2024-01-01", "2024-01-02"))
   }
 
+  test("archive appends each file in (ts, id) order, planned with one sort (D2)") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.{QueryExecution, SortExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    implicit val sqlCtx = spark.sqlContext
+    // the write's executed plan, captured as the micro-batch runs it
+    val writePlans = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.executedPlan.exists(_.isInstanceOf[DataWritingCommandExec]))
+          writePlans.add(qe)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val mem = MemoryStream[(Long, Timestamp, String)]
+    val out = Files.createTempDirectory("graft-archsort-").toString
+    val ckpt = Files.createTempDirectory("graft-ckpt-").toString
+    // 5,000 distinct ids in random order on ~2,000 distinct seconds of one
+    // day, so ts ties need the id tiebreak
+    val rnd = new scala.util.Random(11)
+    val base = ts("2024-01-02 00:00:00").getTime
+    mem.addData(rnd.shuffle((0L until 5000L).toVector).map { id =>
+      (id, new Timestamp(base + rnd.nextInt(2000) * 1000L), s"r$id")
+    }: _*)
+    spark.listenerManager.register(listener)
+    try {
+      ArchiveStream.archive(mem.toDF().toDF("id", "ts", "raw"), out, ckpt,
+        trigger = Trigger.AvailableNow()).awaitTermination()
+      val files = new java.io.File(out + "/d=2024-01-02").listFiles()
+        .filter(_.getName.endsWith(".parquet"))
+      assert(files.length == 1)
+      val keys = spark.read.parquet(files.head.getPath).select("ts", "id")
+        .collect().map(r => (r.getTimestamp(0).getTime, r.getLong(1)))
+      assert(keys.length == 5000)
+      val inversions = keys.sliding(2).count { case Array(a, b) =>
+        Ordering[(Long, Long)].gt(a, b) }
+      assert(inversions == 0, s"$inversions out-of-order neighbours in file order")
+      // listener events arrive asynchronously
+      val deadline = System.nanoTime() + 30000000000L
+      while (writePlans.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(!writePlans.isEmpty, "no write plan captured")
+      val sorts = new AdaptiveSparkPlanHelper {}
+        .collect(writePlans.peek().executedPlan) { case s: SortExec => s }
+      assert(sorts.map(_.sortOrder.map(_.child.sql).mkString(",")) ==
+        Seq("d,ts,id"), writePlans.peek().executedPlan.toString)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   test("sliding window agg runs under a streaming source with watermark (G3)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
